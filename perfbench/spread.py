@@ -3,8 +3,9 @@
 
     python3 perfbench/spread.py --workload knn_serve --seeds 1 2 3 4 5
 
-For every metric of the result line: the median over the runs and the
-distance between the first and third quartile as a share of the median
+For every end-to-end metric of a timed run (--trace 0): the median
+over the runs and the distance between the first and third quartile as
+a share of the median
 (statistics.quantiles, n=4), next to the metric's bound from
 BENCHMARK.json. A benchmark is steady when every spread but setup_s's
 stays below a third of its bound.
@@ -24,7 +25,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
-    ap.add_argument("--trace", type=int, default=0)
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -35,7 +35,7 @@ def main():
             [sys.executable, os.path.join(HERE, "run.py"),
              "--workload", args.workload, "--seed", str(seed),
              "--seconds", str(bench["run_seconds"]),
-             "--trace", str(args.trace)],
+             "--trace", "0"],
             cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
             text=True)
         lines = proc.stdout.strip().splitlines()

@@ -35,16 +35,4 @@ object Dirs {
     }.map(JFiles.size(_: Path)).sum
     finally walk.close()
   }
-
-  /** The IVF artifact directory (the one holding `_centroids`) under
-    * `root`: where the REST server's index build put its index.
-    */
-  def indexDirUnder(root: String): String = {
-    val walk = JFiles.walk(Paths.get(root))
-    try walk.iterator().asScala
-      .find(p => p.getFileName.toString == "_centroids")
-      .map(_.getParent.toString)
-      .getOrElse(throw new IllegalStateException(s"no IVF index under $root"))
-    finally walk.close()
-  }
 }

@@ -35,9 +35,9 @@ object Gen {
     * are converted inside the write's tasks, in parallel.
     */
   def write(spark: SparkSession, path: String, rows: Seq[Row],
-      schema: StructType, files: Int, partitionBy: Seq[String] = Nil): Unit =
+      schema: StructType, files: Int): Unit =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, files), schema)
-      .write.partitionBy(partitionBy: _*).parquet(path)
+      .write.parquet(path)
 
   def writeVectors(spark: SparkSession, path: String, ids: Seq[Long],
       vecs: Seq[Array[Float]], files: Int): Unit =

@@ -3,6 +3,12 @@ package graftbench
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.collection.mutable
+
+import org.apache.spark.BenchAccess
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.http.HttpApi
 
 /** `knn_serve`: one client sends single-vector
@@ -38,6 +44,33 @@ object KnnServe extends Workload {
 
   private val IdPattern = "\"id\":(-?\\d+)".r
 
+  /** Root paths of the file scans in the queries `f` runs, seen through
+    * a QueryExecutionListener.
+    */
+  private def scannedRoots(r: Run)(f: => Unit): Seq[String] = {
+    val roots = mutable.LinkedHashSet[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        roots.synchronized {
+          roots ++= Trace.scans(qe.executedPlan).collect {
+            case s: FileSourceScanExec => s.relation.location.rootPaths
+          }.flatten.map(_.toUri.getPath)
+        }
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    r.spark.listenerManager.register(listener)
+    try f
+    finally {
+      BenchAccess.drainListeners(r.spark.sparkContext)
+      r.spark.listenerManager.unregister(listener)
+    }
+    roots.synchronized(roots.toSeq)
+  }
+
+  // bytes of the files the served search reads, from the last warm-up
+  // request's scans; None if it read no files
+  private var indexBytes: Option[Long] = None
+
   def setup(r: Run): Unit = {
     val sz = size(r)
     val spark = r.spark
@@ -67,11 +100,20 @@ object KnnServe extends Workload {
     r.log("index built")
     // warm-up until timing starts: the per-request latency keeps falling
     // while the JIT and Spark's codegen caches fill
-    queries.take(sz.warmup).foreach { case (q, v) =>
+    def warm(q: Long, v: Array[Float]): Unit = {
       val res = post("/collections/corpus/search", searchBody(v, sz.nprobe))
       require(res.statusCode == 200, s"warm-up search failed: ${res.body}")
       answered(q, res.body)
     }
+    queries.take(sz.warmup - 1).foreach { case (q, v) => warm(q, v) }
+    // the served index is wherever the last warm-up search reads its
+    // rows; graft does not publish the path
+    val roots = scannedRoots(r) {
+      val (q, v) = queries(sz.warmup - 1)
+      warm(q, v)
+    }
+    r.log(s"served search reads ${roots.mkString(", ")}")
+    indexBytes = Some(roots.map(Dirs.dataBytes).sum).filter(_ > 0)
   }
 
   // recall counts the warm-up answers too: answers do not depend on
@@ -119,9 +161,11 @@ object KnnServe extends Workload {
     r.e2e("throughput") = r.attempted / (busy / 1000)
     r.e2e("latency_p50_ms") = Stats.median(lat)
     r.e2e("recall_at_10") = recall
-    val indexDir = Dirs.indexDirUnder(System.getProperty("java.io.tmpdir"))
-    r.e2e("index_bytes_per_row") =
-      Dirs.dataBytes(indexDir).toDouble / sz.vectors
+    indexBytes match {
+      case Some(b) => r.e2e("index_bytes_per_row") = b.toDouble / sz.vectors
+      case None => r.log("index_bytes_per_row left out: the served search " +
+        "read no parquet files, so the index's size is unknown")
+    }
     r.extra("serve_p90_ms") = Stats.quantile(lat, 0.9)
     r.extra("requests") = r.attempted.toDouble
     r.check("recall_at_10", recall >= 0.5,

@@ -41,14 +41,14 @@ final class Run(val spark: SparkSession, val trace: Trace, val work: String,
   }
   def correct: Boolean = bad.isEmpty
 
-  /** Whether op `i` of the timed window runs traced: every other one in
-    * a traced run, so the untraced ones give the overhead baseline.
+  /** Whether op `i` of the timed window runs traced. A traced run
+    * alternates in the order traced, untraced, untraced, traced, … so
+    * that a latency drift over the window falls on both arms alike and
+    * the untraced ops give the overhead baseline.
     */
-  def arm(i: Int): Boolean = trace.enabled && i % 2 == 1
-  /** Ops a traced run needs: the first, which may still be cold, then
-    * one of each arm.
-    */
-  def minOps: Int = if (trace.enabled) 3 else 1
+  def arm(i: Int): Boolean = trace.enabled && (i % 4 == 0 || i % 4 == 3)
+  /** Ops a traced run needs: one round of the pattern above. */
+  def minOps: Int = if (trace.enabled) 4 else 1
 
   def latency(traced: Boolean, ms: Double): Unit = lat += ((ms, traced))
   def latencies: Seq[Double] = lat.map(_._1).toSeq
@@ -214,10 +214,8 @@ object PerLayer {
       .flatMap(Trace.descendants(_, byParent)).filter(_.kind == "sql")
     val c = t.counts
     val results = c("search_results")
-    // the first op is left out: it may still be paying for a cold JVM
-    val arms = r.lat.drop(1)
-    val traced = Stats.median(arms.filter(_._2).map(_._1).toSeq)
-    val untraced = Stats.median(arms.filterNot(_._2).map(_._1).toSeq)
+    val traced = Stats.median(r.lat.filter(_._2).map(_._1).toSeq)
+    val untraced = Stats.median(r.lat.filterNot(_._2).map(_._1).toSeq)
     Map(
       "embed_ms" -> perOp("embed"),
       "embed_self_ms" -> self("embed"),

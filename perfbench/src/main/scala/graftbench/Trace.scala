@@ -160,6 +160,8 @@ final class Trace(spark: SparkSession, val enabled: Boolean) {
 
   private def begin(): Unit = {
     req += 1
+    // events of the untraced op just before must not reach the listener
+    BenchAccess.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(sparkListener)
     codegen0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     rule0 = RuleExecutor.getCurrentMetrics().time
@@ -235,18 +237,23 @@ object Trace {
     kids ++ kids.flatMap(descendants(_, byParent))
   }
 
+  /** The data-source scans of an executed plan, adaptive stages and
+    * subqueries included; a reused exchange's scans are counted once.
+    */
+  def scans(p: SparkPlan): Seq[DataSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    case s: QueryStageExec => scans(s.plan)
+    case _: ReusedExchangeExec => Nil
+    case s: DataSourceScanExec => Seq(s)
+    case other =>
+      other.children.flatMap(scans) ++ other.subqueries.flatMap(scans)
+  }
+
   /** Rows produced by the file scans of an executed plan: the input
     * side of `rows_scanned_per_result`.
     */
-  def scanRows(p: SparkPlan): Long = p match {
-    case a: AdaptiveSparkPlanExec => scanRows(a.executedPlan)
-    case s: QueryStageExec => scanRows(s.plan)
-    case _: ReusedExchangeExec => 0L
-    case s: DataSourceScanExec =>
-      s.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
-    case other =>
-      other.children.map(scanRows).sum + other.subqueries.map(scanRows).sum
-  }
+  def scanRows(p: SparkPlan): Long =
+    scans(p).map(_.metrics.get("numOutputRows").map(_.value).getOrElse(0L)).sum
 
   // the metering object is protected in Scala terms; its per-rule time
   // map is private, so both are read reflectively
