@@ -90,6 +90,8 @@ import graft.operators.Knn
 class HttpApi(spark: SparkSession, port: Int = 0,
     auth: Option[(String, String)] = None,
     maxBodyBytes: Long = 32L * 1024 * 1024) {
+  // headers and body go out as two segments; Nagle holds each body ~40 ms
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
 
   /** Minimal OpenAPI 3 skeleton: one entry per route (summaries only —
@@ -1446,136 +1448,144 @@ class HttpApi(spark: SparkSession, port: Int = 0,
             case _ => None
           }) match {
             case Some(err) => respond(ex, 400, err)
-            case None =>
-              val v = vec.get
-              val queries = spark.createDataFrame(
-                java.util.List.of(org.apache.spark.sql.Row(0L, v)),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField(idCol,
-                    org.apache.spark.sql.types.LongType),
-                  org.apache.spark.sql.types.StructField(vecCol,
-                    org.apache.spark.sql.types.ArrayType(
-                      org.apache.spark.sql.types.FloatType)))))
-              // optional metadata equality filter (vector-db staple):
-              // column name must be a valid identifier ON the
-              // collection — never interpolated as SQL — and the value
-              // rides as a typed literal Column
-              val fval = jsonField(body, "filter_value")
-              val pred = (fcolOk, fval) match {
-                case (Some(c), Some(v)) => Some(col(c) === lit(v))
-                case _ => None
-              }
-              // an IVF index built by /index serves the search when its
-              // columns match; "nprobe" trades recall for probed cells
-              // (default all cells == exact). Otherwise brute force.
-              val nprobe = nprobeOpt
-              // lazy: the 400 guards below must fire before any plan
-              // construction can throw on a mismatched collection
-              def ranked = Option(ivfModels.get(name)) match {
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol &&
-                      m.assigned.columns.contains("bits") =>
-                  // bq index: hamming shortlist over the stored bits,
-                  // exact rescore; a metadata filter rides inside the
-                  // shortlist scan so it cannot starve the pool
-                  graft.operators.IvfIndex.searchBqRefine(m, queries, k,
-                    nprobe.getOrElse(m.centroids.length),
-                    shortlistOpt.getOrElse(math.max(4 * k, 40)), metric,
-                    filter = pred)
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol &&
-                      m.assigned.columns.contains("half") =>
-                  // f16 index: symmetric half-precision scoring over
-                  // the halved payload, single stage (no rescore)
-                  graft.operators.IvfIndex.searchF16(m, queries, k,
-                    nprobe.getOrElse(m.centroids.length), metric,
-                    filter = pred)
-                case Some(m)
-                    if m.idCol == idCol && m.vecCol == vecCol =>
-                  graft.operators.IvfIndex.search(m, queries, k,
-                    nprobe.getOrElse(m.centroids.length), metric,
-                    filter = pred)
-                case _ =>
-                  Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
-                    idCol, vecCol, k, metric)
-              }
-              // optional MMR diversification: re-rank the top
-              // max(4k, 20) candidates down to k with the given λ
-              val mmrLambda = mmrLambdaOpt
-              val idIntegral = df.schema(idCol).dataType match {
-                case org.apache.spark.sql.types.LongType |
-                     org.apache.spark.sql.types.IntegerType |
-                     org.apache.spark.sql.types.ShortType => true
-                case _ => false
-              }
-              if (mmrLambda.isDefined && !idIntegral)
-                respond(ex, 400,
-                  """{"error":"mmr_lambda requires an integral id column"}""")
-              else if (radiusOpt.isDefined && !idIntegral)
-                respond(ex, 400,
-                  """{"error":"radius requires an integral id column"}""")
-              else if (radiusOpt.isDefined) {
-                val r = radiusOpt.get
-                val ranged = Option(ivfModels.get(name)) match {
+            case None => try {
+                val v = vec.get
+                val queries = spark.createDataFrame(
+                  java.util.List.of(org.apache.spark.sql.Row(0L, v)),
+                  org.apache.spark.sql.types.StructType(Seq(
+                    org.apache.spark.sql.types.StructField(idCol,
+                      org.apache.spark.sql.types.LongType),
+                    org.apache.spark.sql.types.StructField(vecCol,
+                      org.apache.spark.sql.types.ArrayType(
+                        org.apache.spark.sql.types.FloatType)))))
+                // optional metadata equality filter (vector-db staple):
+                // column name must be a valid identifier ON the
+                // collection — never interpolated as SQL — and the value
+                // rides as a typed literal Column
+                val fval = jsonField(body, "filter_value")
+                val pred = (fcolOk, fval) match {
+                  case (Some(c), Some(v)) => Some(col(c) === lit(v))
+                  case _ => None
+                }
+                // an IVF index built by /index serves the search when its
+                // columns match; "nprobe" trades recall for probed cells
+                // (default all cells == exact). Otherwise brute force.
+                val nprobe = nprobeOpt
+                // lazy: the 400 guards below must fire before any plan
+                // construction can throw on a mismatched collection
+                def ranked = Option(ivfModels.get(name)) match {
+                  case Some(m)
+                      if m.idCol == idCol && m.vecCol == vecCol &&
+                        m.assigned.columns.contains("bits") =>
+                    // bq index: hamming shortlist over the stored bits,
+                    // exact rescore; a metadata filter rides inside the
+                    // shortlist scan so it cannot starve the pool
+                    graft.operators.IvfIndex.searchBqRefine(m, queries, k,
+                      nprobe.getOrElse(m.centroids.length),
+                      shortlistOpt.getOrElse(math.max(4 * k, 40)), metric,
+                      filter = pred)
+                  case Some(m)
+                      if m.idCol == idCol && m.vecCol == vecCol &&
+                        m.assigned.columns.contains("half") =>
+                    // f16 index: symmetric half-precision scoring over
+                    // the halved payload, single stage (no rescore)
+                    graft.operators.IvfIndex.searchF16(m, queries, k,
+                      nprobe.getOrElse(m.centroids.length), metric,
+                      filter = pred)
                   case Some(m)
                       if m.idCol == idCol && m.vecCol == vecCol =>
-                    graft.operators.IvfIndex.rangeSearch(m, queries, r,
+                    graft.operators.IvfIndex.search(m, queries, k,
                       nprobe.getOrElse(m.centroids.length), metric,
                       filter = pred)
                   case _ =>
-                    val qcol = org.apache.spark.sql.functions
-                      .typedlit(vec.get.toSeq)
-                    val w = org.apache.spark.sql.expressions.Window
-                      .orderBy(col("dist"), col("nid"))
-                    pred.foldLeft(df)(_.where(_))
-                      .select(col(idCol).cast("long").as("nid"),
-                        Knn.distance(metric)(col(vecCol), qcol)
-                          .as("dist"))
-                      .where(col("dist") <= r)
-                      .withColumn("rank", row_number().over(w))
-                      .withColumn("qid", lit(0L))
+                    Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
+                      idCol, vecCol, k, metric)
                 }
-                val res = ranged
-                  .select(col("qid"), col("nid"), col("rank"),
-                    col("dist"))
-                  .orderBy(col("rank")).limit(rlimit).collect()
-                val items = res.map { rr =>
-                  s"""{"id":${rr.get(1)},"rank":${rr.getInt(2)},
-                     |"distance":${rr.getDouble(3)}}""".stripMargin
-                    .replace("\n", "")
-                }.mkString("[", ",", "]")
-                respond(ex, 200, s"""{"results":$items}""")
-              } else {
-                val res = mmrLambda match {
-                  case Some(l) =>
-                    val wide = Option(ivfModels.get(name)) match {
-                      case Some(m)
-                          if m.idCol == idCol && m.vecCol == vecCol =>
-                        graft.operators.IvfIndex.search(m, queries,
-                          math.max(4 * k, 20),
-                          nprobe.getOrElse(m.centroids.length), metric,
-                          filter = pred)
-                      case _ =>
-                        Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
-                          idCol, vecCol, math.max(4 * k, 20), metric)
-                    }
-                    graft.operators.Knn.mmrRerank(wide, df, idCol,
-                        vecCol, l, k)
-                      .orderBy(col("mmr_rank")).collect()
-                  case None => ranked.orderBy(col("rank")).collect()
+                // optional MMR diversification: re-rank the top
+                // max(4k, 20) candidates down to k with the given λ
+                val mmrLambda = mmrLambdaOpt
+                val idIntegral = df.schema(idCol).dataType match {
+                  case org.apache.spark.sql.types.LongType |
+                       org.apache.spark.sql.types.IntegerType |
+                       org.apache.spark.sql.types.ShortType => true
+                  case _ => false
                 }
-                val items = res.map { r =>
-                  val id = r.get(1) match {
-                    case s: String =>
-                      "\"" + graft.util.Json.escape(s) + "\""
-                    case other => other.toString
+                if (mmrLambda.isDefined && !idIntegral)
+                  respond(ex, 400,
+                    """{"error":"mmr_lambda requires an integral id column"}""")
+                else if (radiusOpt.isDefined && !idIntegral)
+                  respond(ex, 400,
+                    """{"error":"radius requires an integral id column"}""")
+                else if (radiusOpt.isDefined) {
+                  val r = radiusOpt.get
+                  val ranged = Option(ivfModels.get(name)) match {
+                    case Some(m)
+                        if m.idCol == idCol && m.vecCol == vecCol =>
+                      graft.operators.IvfIndex.rangeSearch(m, queries, r,
+                        nprobe.getOrElse(m.centroids.length), metric,
+                        filter = pred)
+                    case _ =>
+                      val qcol = org.apache.spark.sql.functions
+                        .typedlit(vec.get.toSeq)
+                      val w = org.apache.spark.sql.expressions.Window
+                        .orderBy(col("dist"), col("nid"))
+                      pred.foldLeft(df)(_.where(_))
+                        .select(col(idCol).cast("long").as("nid"),
+                          Knn.distance(metric)(col(vecCol), qcol)
+                            .as("dist"))
+                        .where(col("dist") <= r)
+                        .withColumn("rank", row_number().over(w))
+                        .withColumn("qid", lit(0L))
                   }
-                  val d = r.getDouble(3)
-                  val dist =
-                    if (d.isNaN || d.isInfinite) "null" else d.toString
-                  s"""{"id":$id,"rank":${r.getInt(2)},"distance":$dist}"""
-                }.mkString("[", ",", "]")
-                respond(ex, 200, s"""{"results":$items}""")
+                  val res = ranged
+                    .select(col("qid"), col("nid"), col("rank"),
+                      col("dist"))
+                    .orderBy(col("rank")).limit(rlimit).collect()
+                  val items = res.map { rr =>
+                    s"""{"id":${rr.get(1)},"rank":${rr.getInt(2)},
+                       |"distance":${rr.getDouble(3)}}""".stripMargin
+                      .replace("\n", "")
+                  }.mkString("[", ",", "]")
+                  respond(ex, 200, s"""{"results":$items}""")
+                } else {
+                  val res = mmrLambda match {
+                    case Some(l) =>
+                      val wide = Option(ivfModels.get(name)) match {
+                        case Some(m)
+                            if m.idCol == idCol && m.vecCol == vecCol =>
+                          graft.operators.IvfIndex.search(m, queries,
+                            math.max(4 * k, 20),
+                            nprobe.getOrElse(m.centroids.length), metric,
+                            filter = pred)
+                        case _ =>
+                          Knn.topK(pred.foldLeft(df)(_.where(_)), queries,
+                            idCol, vecCol, math.max(4 * k, 20), metric)
+                      }
+                      graft.operators.Knn.mmrRerank(wide, df, idCol,
+                          vecCol, l, k)
+                        .orderBy(col("mmr_rank")).collect()
+                    // ≤ k rows: rank them here, not in a distributed sort
+                    case None => ranked.collect().sortBy(_.getInt(2))
+                  }
+                  val items = res.map { r =>
+                    val id = r.get(1) match {
+                      case s: String =>
+                        "\"" + graft.util.Json.escape(s) + "\""
+                      case other => other.toString
+                    }
+                    val d = r.getDouble(3)
+                    val dist =
+                      if (d.isNaN || d.isInfinite) "null" else d.toString
+                    s"""{"id":$id,"rank":${r.getInt(2)},"distance":$dist}"""
+                  }.mkString("[", ",", "]")
+                  respond(ex, 200, s"""{"results":$items}""")
+                }
+              } catch {
+                // a malformed query vector (null, or the wrong
+                // dimension for the index) is the client's error
+                case e: IllegalArgumentException =>
+                  respond(ex, 400, s"""{"error":"${graft.util.Json
+                    .escape(e.getMessage)}"}""")
               }
           }
         }

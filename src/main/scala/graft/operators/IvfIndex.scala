@@ -18,7 +18,9 @@ import graft.functions.VectorFunctions
   * merely never scored. Scan volume per query batch is
   * ~nprobe/nCells of the corpus bytes; at 1000 executors over 100 TB
   * the scan skips the other cells' files entirely (PartitionFilters,
-  * guarded by PlanSpec/IvfSpec).
+  * guarded by PlanSpec/IvfSpec). Every search path picks its cells in
+  * one driver-side pass over the collected queries (`probe`), which
+  * feeds both that filter and the broadcast probe join.
   *
   * Optionally combine with PQ codes (IVF-PQ): `searchAdc` scores
   * candidates with asymmetric-distance lookup tables over u8 codes
@@ -636,41 +638,96 @@ object IvfIndex {
     Model(cents, assigned, idCol, vecCol, path)
   }
 
-  /** Restrict a cell-partitioned corpus to the cells a probe set
-    * touches. The distinct probed-cell list is bounded by nCells (a
-    * model PARAMETER, not a data-scale quantity), so collecting it to
-    * drive a partition-pruning IN filter is safe at any corpus size.
+  /** One query batch's probe set, computed once on the driver.
+    *
+    * @param rows (qid, qvec, cell_id): one row per (query, probed
+    *   cell), a local relation that broadcasts into the candidate join
+    * @param queries (qid, qvec): the collected queries, a local
+    *   relation for the exact-rescore joins of the two-stage paths
+    * @param cells the sorted distinct probed cells; bounded by nCells (a
+    *   model parameter, not a data-scale quantity)
     */
-  private def pruneToProbedCells(corpus: DataFrame,
-      probes: DataFrame): DataFrame = {
-    val cells = probes.select(col("cell_id")).distinct()
-      .collect().map(_.getInt(0))
-    corpus.where(col("cell_id").isin(cells.map(Int.box).toSeq: _*))
+  private final case class Probes(rows: DataFrame, queries: DataFrame,
+      cells: Seq[Int]) {
+    /** Restrict a cell-partitioned corpus to the probed cells: the
+      * `cell_id IN (...)` filter reaches the scan as a PartitionFilter,
+      * so unprobed cells are never read.
+      */
+    def prune(corpus: DataFrame): DataFrame =
+      corpus.where(col("cell_id").isin(cells.map(Int.box): _*))
   }
 
-  /** Cells each query must probe: the nprobe nearest centroids. Small
-    * (|queries| x nprobe rows) → broadcast into the candidate join.
+  /** The cells each query must probe: its `nprobe` nearest centroids by
+    * squared L2 in double, ties to the lower cell index. Every IVF
+    * search path probes through here, once per call.
+    *
+    * The queries' (qid, vector) pairs are collected once and the
+    * argmin runs in plain Scala over `model.centroids`; for a
+    * `LocalRelation` query (HttpApi, IndexedKnnRule) the collect
+    * launches no Spark job, so building a search plan runs none. The
+    * driver holds |queries| x nprobe probe rows, vectors included —
+    * the same rows the probe broadcast has always brought to it, so the
+    * collect adds no new scale limit.
+    *
+    * A null query vector, or one whose dimension differs from the
+    * centroids', throws an IllegalArgumentException naming the qid.
     */
-  private def probeCells(model: Model, queries: DataFrame,
-      nprobe: Int): DataFrame = {
+  private def probe(model: Model, queries: DataFrame, vecCol: String,
+      nprobe: Int): Probes = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val spark = queries.sparkSession
-    val bc = spark.sparkContext.broadcast(model.centroids)
-    val probesU = udf((v: Seq[Float]) => {
-      val q = v.toArray
-      bc.value.zipWithIndex
-        .map { case (c, i) =>
-          var acc = 0.0; var d = 0
-          while (d < q.length) {
-            val x = q(d).toDouble - c(d); acc += x * x; d += 1
-          }
-          (acc, i)
-        }
-        .sortBy(identity).take(nprobe).map(_._2)
-    })
-    queries.select(col(model.idCol).cast("long").as("qid"),
-        col(model.vecCol).as("qvec"),
-        explode(probesU(col(model.vecCol))).as("cell_id"))
+    val qs = queries.select(col(model.idCol).cast("long").as("qid"),
+      col(vecCol).as("qvec"))
+    val collected = qs.collect()
+    val cents = model.centroids
+    val dim = cents.headOption.map(_.length).getOrElse(0)
+    val rows = collected.toSeq.flatMap { r =>
+      val qid = r.get(0)
+      if (r.isNullAt(1))
+        throw new IllegalArgumentException(s"query $qid has a null vector")
+      val v = r.getSeq[Any](1)
+      if (v.length != dim)
+        throw new IllegalArgumentException(
+          s"query $qid has dimension ${v.length}, the index's centroids " +
+            s"have $dim")
+      val q = v.map {
+        case x: Number => x.floatValue().toDouble
+        case _ => throw new IllegalArgumentException(
+          s"query $qid has a null vector element")
+      }.toArray
+      val dist = cents.map { c =>
+        var acc = 0.0; var d = 0
+        while (d < dim) { val x = q(d) - c(d); acc += x * x; d += 1 }
+        acc
+      }
+      // stable sort of ascending indices: equal distances keep the
+      // lower cell index first
+      val order = cents.indices.toArray
+      scala.util.Sorting.stableSort(order,
+        (a: Int, b: Int) => java.lang.Double.compare(dist(a), dist(b)) < 0)
+      order.take(nprobe).map(c => Row(qid, r.get(1), c))
+    }
+    val qvecType = qs.schema("qvec").dataType
+    val rowSchema = StructType(Seq(StructField("qid", LongType),
+      StructField("qvec", qvecType), StructField("cell_id", IntegerType)))
+    Probes(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), rowSchema),
+      spark.createDataFrame(java.util.Arrays.asList(collected.toSeq: _*),
+        qs.schema),
+      rows.map(_.getInt(2)).distinct.sorted)
   }
+
+  /** Per-query bounded top-k over (qid, nid, `score`) rows, exploded to
+    * the (qid, nid, rank, dist) shape every search returns.
+    */
+  private def topK(scored: DataFrame, k: Int,
+      score: String = "dist"): DataFrame =
+    scored.groupBy(col("qid"))
+      .agg(Knn.topk_by_score(col(score), col("nid"), k).as("nn"))
+      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
+      .select(col("qid"), col("nn.id").as("nid"),
+        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
 
   /** ANN top-k: probe nprobe cells, exact distances within candidates,
     * bounded top-k aggregation. Same output shape as `Knn.topK`.
@@ -685,26 +742,14 @@ object IvfIndex {
   def search(model: Model, queries: DataFrame, k: Int, nprobe: Int,
       metric: String = "l2sq",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    // probes are |queries| x nprobe rows — small enough that the one
-    // recomputation (pruning collect + join lineage) is cheaper than
-    // leaking a cached block per call
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0)
-    // cell_id IN (probed) reaches the scan as a PartitionFilter on the
-    // cell-partitioned index — unprobed cells are never read
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+    val p = probe(model, queries, model.vecCol, nprobe)
+    val corpus = filter.foldLeft(p.prune(model.assigned))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         col(model.vecCol).as("cvec"))
-    val scored = corpus.join(probes, "cell_id")
+    topK(corpus.join(broadcast(p.rows), "cell_id")
       .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")), k)
   }
 
   /** Vector RANGE query: every neighbor within `radius`, not a fixed
@@ -734,14 +779,12 @@ object IvfIndex {
       nprobe: Int, metric: String = "l2sq",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(radius > 0, s"radius must be positive (got $radius)")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0)
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+    val p = probe(model, queries, model.vecCol, nprobe)
+    val corpus = filter.foldLeft(p.prune(model.assigned))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         col(model.vecCol).as("cvec"))
-    corpus.join(probes, "cell_id")
+    corpus.join(broadcast(p.rows), "cell_id")
       .select(col("qid"), col("nid"),
         Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
       .where(col("dist") <= radius)
@@ -765,8 +808,15 @@ object IvfIndex {
     */
   def searchAdc(model: Model, quantized: DataFrame, pqCol: String,
       codebook: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int, lutScale: Option[Double] = None): DataFrame = {
-    val spark = queries.sparkSession
+      nprobe: Int, lutScale: Option[Double] = None): DataFrame =
+    adcTopK(model, quantized, pqCol, codebook,
+      probe(model, queries, model.vecCol, nprobe), k, lutScale)
+
+  /** [[searchAdc]] over an already computed probe set. */
+  private def adcTopK(model: Model, quantized: DataFrame, pqCol: String,
+      codebook: DataFrame, p: Probes, k: Int,
+      lutScale: Option[Double]): DataFrame = {
+    val spark = quantized.sparkSession
     val cb = ProductQuantizer.localize(codebook)
     val cbBc = spark.sparkContext.broadcast(cb)
     val subdims = cb.map(_.head.length)
@@ -793,14 +843,12 @@ object IvfIndex {
         }.toSeq
       }.toSeq
     })
-    val probes0 = probeCells(model, queries, nprobe)
-      .withColumn("lut", lutU(col("qvec")))
-      .drop("qvec")
-    val probes = broadcast(probes0)
+    val probes = broadcast(p.rows.withColumn("lut", lutU(col("qvec")))
+      .drop("qvec"))
     // same storage-level pruning as `search`: quantized is a projection
     // over the cell-partitioned index, so the IN filter still pushes
     // down to the scan as a PartitionFilter
-    val corpus = pruneToProbedCells(quantized, probes0)
+    val corpus = p.prune(quantized)
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"), col(pqCol).as("codes"))
     // codegen ADC table-sum (PqAdcScore): this runs once per
@@ -808,16 +856,12 @@ object IvfIndex {
     // corpus-fraction-scale path where the former interpreted UDF
     // boxed a Seq[Seq[Double]] LUT and a Seq[Byte] code row per call
     // and kept the whole shortlist stage out of whole-stage codegen
-    val scored = corpus.join(probes, "cell_id")
+    topK(corpus.join(probes, "cell_id")
       .select(col("qid"), col("nid"),
         graft.functions.VectorFunctions.col(graft.functions.PqAdcScore(
           graft.functions.VectorFunctions.expr(col("lut")),
-          graft.functions.VectorFunctions.expr(col("codes")))).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+          graft.functions.VectorFunctions.expr(col("codes")))).as("dist")),
+      k)
   }
 
   /** Two-stage IVF-PQ search — ADC shortlist + exact re-rank (Jégou,
@@ -845,28 +889,29 @@ object IvfIndex {
       shortlist: Int, metric: String = "l2sq",
       lutScale: Option[Double] = None): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val pool = searchAdc(model, quantized, pqCol, codebook, queries,
-        shortlist, nprobe, lutScale)
+    val p = probe(model, queries, model.vecCol, nprobe)
+    val pool = adcTopK(model, quantized, pqCol, codebook, p, shortlist,
+        lutScale)
       .select(col("qid"), col("nid"))
-    val qv = queries.select(
-      col(model.idCol).cast("long").as("qid"), col(model.vecCol).as("qvec"))
     // every shortlisted id lives in a probed cell, so the exact-rescore
     // float read can carry the same cell PartitionFilter as stage 1 —
     // without it the rescore would scan the float column of EVERY cell
     // and undo the nprobe/nCells read reduction the shortlist pass earns
-    val cv = pruneToProbedCells(model.assigned,
-        probeCells(model, queries, nprobe))
-      .select(
-        col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
-    val exact = cv.join(broadcast(pool), "nid")
-      .join(broadcast(qv), "qid")
+    rescore(model, p, pool, k, metric)
+  }
+
+  /** Exact re-rank of a (qid, nid) shortlist pool: the float vectors of
+    * the pooled ids, read from the probed cells only, against the
+    * collected query vectors; top `k` per query.
+    */
+  private def rescore(model: Model, p: Probes, pool: DataFrame, k: Int,
+      metric: String): DataFrame = {
+    val cv = p.prune(model.assigned).select(
+      col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
+    topK(cv.join(broadcast(pool), "nid")
+      .join(broadcast(p.queries), "qid")
       .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    exact.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")), k)
   }
 
   /** [[buildWithCentroids]] variant that ALSO stores the packed sign
@@ -1022,24 +1067,18 @@ object IvfIndex {
     require(model.assigned.columns.contains("half"),
       s"index at ${model.indexPath} carries no 'half' column — build " +
         "it with buildF16WithCentroids")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0
+    val p = probe(model, queries, model.vecCol, nprobe)
+    val probes = broadcast(p.rows
       .withColumn("qdec", VectorFunctions.fp16_decode(
         VectorFunctions.fp16_encode(col("qvec"))))
       .drop("qvec"))
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+    val corpus = filter.foldLeft(p.prune(model.assigned))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         VectorFunctions.fp16_decode(col("half")).as("cdec"))
-    val scored = corpus.join(probes, "cell_id")
+    topK(corpus.join(probes, "cell_id")
       .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cdec"), col("qdec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+        Knn.distance(metric)(col("cdec"), col("qdec")).as("dist")), k)
   }
 
   /** Two-stage binary-quantized IVF search: probe cells as in
@@ -1067,42 +1106,26 @@ object IvfIndex {
     require(model.assigned.columns.contains("bits"),
       s"index at ${model.indexPath} carries no 'bits' column — build " +
         "it with buildBqWithCentroids")
-    val probes0 = probeCells(model, queries, nprobe)
-    val probes = broadcast(probes0
+    val p = probe(model, queries, model.vecCol, nprobe)
+    val probes = broadcast(p.rows
       .withColumn("qbits", VectorFunctions.bq_encode(col("qvec")))
       .drop("qvec"))
     // bits-only projection: the float vector column must NOT appear in
     // this scan's ReadSchema (asserted in IvfSpec); a metadata filter
     // adds its own column to the scan but still never the floats
-    val bitsScan = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+    val bitsScan = filter.foldLeft(p.prune(model.assigned))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"), col("bits"))
-    val pool = bitsScan.join(probes, "cell_id")
+    val pool = topK(bitsScan.join(probes, "cell_id")
       .select(col("qid"), col("nid"),
         VectorFunctions.bq_hamming(col("bits"), col("qbits"))
-          .cast("double").as("hd"))
-      .groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("hd"), col("nid"), shortlist).as("sl"))
-      .select(col("qid"), explode(col("sl")).as("e"))
-      .select(col("qid"), col("e.id").as("nid"))
-    val qv = queries.select(
-      col(model.idCol).cast("long").as("qid"), col(model.vecCol).as("qvec"))
+          .cast("double").as("hd")), shortlist, score = "hd")
+      .select(col("qid"), col("nid"))
     // shortlisted ids can only come from probed cells, so the float
     // fetch-back is pruned by the SAME probe set as the bits scan —
     // this is what makes "floats solely for the shortlist" literal:
     // unprobed cells contribute neither bits pages nor float pages
-    val cv = pruneToProbedCells(model.assigned, probes0).select(
-      col(model.idCol).cast("long").as("nid"), col(model.vecCol).as("cvec"))
-    val exact = cv.join(broadcast(pool), "nid")
-      .join(broadcast(qv), "qid")
-      .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    exact.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+    rescore(model, p, pool, k, metric)
   }
 
   private val sq8BuildMemo = new java.util.concurrent.ConcurrentHashMap[
@@ -1284,25 +1307,16 @@ object IvfIndex {
       queries: DataFrame, queryVecCol: String, k: Int, nprobe: Int,
       metric: String = "l2sq",
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val qm = Model(model.centroids, model.assigned, model.idCol,
-      queryVecCol, model.indexPath)
-    val probes0 = probeCells(qm, queries, nprobe)
-    val probes = broadcast(probes0)
-    val corpus = filter.foldLeft(
-        pruneToProbedCells(model.assigned, probes0))(_.where(_))
+    val p = probe(model, queries, queryVecCol, nprobe)
+    val corpus = filter.foldLeft(p.prune(model.assigned))(_.where(_))
       .select(col("cell_id"),
         col(model.idCol).cast("long").as("nid"),
         VectorFunctions.col(graft.functions.Sq8Decode(
           VectorFunctions.expr(col("sq")),
           new graft.functions.DoubleVecParam(mins),
           new graft.functions.DoubleVecParam(maxs))).as("cvec"))
-    val scored = corpus.join(probes, "cell_id")
+    topK(corpus.join(broadcast(p.rows), "cell_id")
       .select(col("qid"), col("nid"),
-        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist"))
-    scored.groupBy(col("qid"))
-      .agg(Knn.topk_by_score(col("dist"), col("nid"), k).as("nn"))
-      .select(col("qid"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(col("qid"), col("nn.id").as("nid"),
-        (col("pos") + 1).cast("int").as("rank"), col("nn.score").as("dist"))
+        Knn.distance(metric)(col("cvec"), col("qvec")).as("dist")), k)
   }
 }

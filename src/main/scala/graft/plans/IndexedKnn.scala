@@ -246,11 +246,12 @@ object IndexedKnnRule extends Rule[LogicalPlan] {
 
   /** Re-entrancy latch. [[searchPlan]] optimizes the probe subplan
     * (`queryExecution.optimizedPlan`), which runs this very rule on the
-    * inner plan; and `IvfIndex.search` launches a small bounded Spark
-    * job at plan time (centroid argmin over |queries| rows — bounded by
-    * nCells, a parameter, never data scale). The latch makes the inner
-    * optimization a guaranteed no-op instead of relying on the probe
-    * plan not matching the sort-limit shape.
+    * inner plan; and `IvfIndex.search` collects its queries to probe
+    * cells on the driver, which plans and executes the query relation
+    * (a one-row `LocalRelation` here, so the collect launches no Spark
+    * job and the rule plans without running one). The latch makes the
+    * inner optimization a guaranteed no-op instead of relying on the
+    * probe plan not matching the sort-limit shape.
     */
   private val rewriting = new ThreadLocal[Boolean] {
     override def initialValue(): Boolean = false

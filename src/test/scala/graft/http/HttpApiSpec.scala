@@ -1448,4 +1448,67 @@ class HttpApiSpec extends SparkSuite {
       assert(ok.body().contains("\"embeddings\""))
     } finally secured.stop()
   }
+
+  test("a single-vector search on an f32 IVF index runs at most 3 Spark " +
+      "jobs; a malformed query vector gets 400, not 500") {
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .createOrReplaceTempView("jobs_vecs")
+    assert(post("/collections/jobs_vecs/index", """{"n_cells":8}""")
+      .statusCode() === 201)
+    val vec = (1 to 64).map(i => f"${i * 0.01}%.2f").mkString(",")
+    val body = s"""{"vector":[$vec],"k":5,"nprobe":2}"""
+    assert(post("/collections/jobs_vecs/search", body).statusCode() === 200)
+    // the probe broadcast, the scan with the partial top-k, the final
+    // top-k: no probe jobs, no distributed sort of the k rows
+    val (r, jobs) = countingJobs(post("/collections/jobs_vecs/search", body))
+    assert(r.statusCode() === 200 && r.body().contains("\"rank\":5"))
+    assert(jobs <= 3, s"$jobs Spark jobs for one /search")
+    for (bad <- Seq("0.1,0.2,0.3", (1 to 65).map(_ => "0.1").mkString(","))) {
+      val rb = post("/collections/jobs_vecs/search",
+        s"""{"vector":[$bad],"nprobe":2}""")
+      assert(rb.statusCode() === 400, rb.body())
+      assert(rb.body().contains("dimension"), rb.body())
+    }
+    assert(delete("/collections/jobs_vecs/index").statusCode() === 200)
+  }
+
+  test("responses are not held back by Nagle: 30 sequential requests " +
+      "over one keep-alive connection take a median under 20 ms") {
+    val sock = new java.net.Socket("localhost", api.boundPort)
+    try {
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(10000)
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val out = sock.getOutputStream
+      val req = "GET /openapi.json HTTP/1.1\r\nHost: localhost\r\n\r\n"
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      def readLine(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') {
+          assert(c >= 0, "connection closed mid-response")
+          if (c != '\r') sb.append(c.toChar)
+          c = in.read()
+        }
+        sb.toString
+      }
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        assert(readLine().startsWith("HTTP/1.1 200"))
+        var len = -1
+        var line = readLine()
+        while (line.nonEmpty) {
+          if (line.toLowerCase.startsWith("content-length:"))
+            len = line.drop("content-length:".length).trim.toInt
+          line = readLine()
+        }
+        assert(len > 0 && in.readNBytes(len).length === len)
+        (System.nanoTime() - t0) / 1e6
+      }
+      roundTripMs()
+      val ms = Seq.fill(30)(roundTripMs()).sorted
+      assert(ms(15) < 20.0, s"median round trip ${ms(15)} ms: ${ms.mkString(",")}")
+    } finally sock.close()
+  }
 }
